@@ -17,16 +17,40 @@ Rebuilds the reference's anonymization stage declaratively:
 The ε-sweep computes the pair set ONCE at max ε and filters per ε
 (neighbors at ε ⊆ neighbors at ε' > ε) — turning the reference's
 Σ O(n²) sweep into one grid join (SURVEY.md §4 'iterative compute').
+It runs on dbscan.py's rep-graph core: the same contraction
+(``eps_join._contract_reps``) and, per ε, the same rep labelling
+(``dbscan._labeled_reps``, the pairs -> cores -> edges -> CC -> cluster
+id chain) — or, while the max-ε pairs fit the driver, one Kruskal pass
+(:func:`_sweep_assignments_driver`, on ``components._union_min_root``)
+that labels every ε level at once.
 """
 
 from __future__ import annotations
 
+import warnings
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbscan_pyspark_spark.functions.distance import l1_distance, l2_distance
-from dbscan_pyspark_spark.operators.components import connected_components
-from dbscan_pyspark_spark.operators.eps_join import _dim_of, _metric_fn, eps_self_join
+# connected_components stays importable here although eps_sweep reaches
+# it through dbscan._labeled_reps: perfbench's traced run wraps this
+# module's name.
+from dbscan_pyspark_spark.operators.components import (  # noqa: F401
+    _union_min_root,
+    connected_components,
+)
+from dbscan_pyspark_spark.operators.dbscan import (
+    _driver_graph_labels,
+    _labeled_reps,
+    _with_rep_labels,
+)
+from dbscan_pyspark_spark.operators.eps_join import (
+    _contract_reps,
+    _dim_of,
+    _metric_fn,
+    eps_join,
+)
 
 
 def cluster_centroids(
@@ -197,14 +221,12 @@ def information_loss(
     )
 
 
-def _sweep_assignments_driver(
-    pairs_pdf, reps_pdf, eps_values, min_pts, min_cluster_size, id_col
-):
+def _sweep_assignments_driver(pairs_pdf, reps_pdf, eps_values, min_pts, id_col):
     """Solve EVERY ε level's cluster assignment in one driver pass (a
     Kruskal sweep) over the max-ε pair relation.
 
-    Equivalence to the per-ε chain (filter → weighted counts → cores →
-    core-incident edges → CC → component masses):
+    Equivalence to the per-ε chain (``dbscan._labeled_reps`` on the
+    pairs with d < ε):
 
     - a rep's weighted neighbor count at ε is Σ{mult_b : d < ε}, which
       only grows with ε, so core status is monotone: a is core at ε iff
@@ -219,20 +241,17 @@ def _sweep_assignments_driver(
     - union-by-min-root union-find labels components with their min rep
       id — the same labels connected_components produces.
 
-    Returns {ε: pandas DataFrame(id, cluster_id)} holding only the
-    CLUSTERED reps (callers left-join: absent = noise/edgeless)."""
+    Returns {ε: pandas DataFrame(id, component)} over the participating
+    reps — connected_components' labels of that ε's edge set."""
     import numpy as np
     import pandas as pd
 
-    rid = reps_pdf[id_col].to_numpy(dtype="int64")
-    rmult = reps_pdf["_mult"].to_numpy(dtype="int64")
-    order = np.argsort(rid)
-    rid, rmult = rid[order], rmult[order]
+    rid = np.sort(reps_pdf[id_col].to_numpy(dtype="int64"))
     n = len(rid)
     ai = np.searchsorted(rid, pairs_pdf["a_id"].to_numpy(dtype="int64"))
     bi = np.searchsorted(rid, pairs_pdf["b_id"].to_numpy(dtype="int64"))
     d = pairs_pdf["distance"].to_numpy(dtype="float64")
-    m = pairs_pdf["_mult_b"].to_numpy(dtype="int64")
+    m = pairs_pdf["b__mult"].to_numpy(dtype="int64")
 
     # dthr per rep: running weighted count up the sorted distance list
     # (ties share a distance value, so the first row whose running sum
@@ -261,36 +280,19 @@ def _sweep_assignments_driver(
     lo_edge = 0
     for eps in sorted(set(float(e) for e in eps_values)):
         hi_edge = int(np.searchsorted(t, eps, side="left"))  # t < eps
-        bu, bv = ai[lo_edge:hi_edge], bi[lo_edge:hi_edge]
+        parent = _union_min_root(parent, ai[lo_edge:hi_edge], bi[lo_edge:hi_edge])
         lo_edge = hi_edge
-        while True:
-            while True:  # full path compression (pointer jumping)
-                grand = parent[parent]
-                if np.array_equal(grand, parent):
-                    break
-                parent = grand
-            pu, pv = parent[bu], parent[bv]
-            hooks = pu != pv
-            if not hooks.any():
-                break
-            lo = np.minimum(pu[hooks], pv[hooks])
-            hi = np.maximum(pu[hooks], pv[hooks])
-            np.minimum.at(parent, hi, lo)  # min root survives the merge
         participating = part < eps
-        mass = np.bincount(
-            parent[participating], weights=rmult[participating],
-            minlength=n,
+        out[eps] = pd.DataFrame(
+            {id_col: rid[participating], "component": rid[parent[participating]]}
         )
-        keep = participating & (mass[parent] >= min_cluster_size)
-        cid = rid[parent[keep]]
-        kid = rid[keep]
-        if min_cluster_size <= 1:
-            # edgeless reps form their own singleton clusters
-            solo = ~participating
-            kid = np.concatenate([kid, rid[solo]])
-            cid = np.concatenate([cid, rid[solo]])
-        out[eps] = pd.DataFrame({id_col: kid, "cluster_id": cid})
     return out
+
+
+# Driver bound of the Kruskal sweep, in max-ε pairs: the same 5M bound as
+# connected_components' union-find fast path. Larger pair sets run the
+# per-ε distributed chain.
+_SWEEP_DRIVER_PAIRS = 5_000_000
 
 
 def eps_sweep(
@@ -302,16 +304,15 @@ def eps_sweep(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    driver_threshold: int = 5_000_000,
 ) -> tuple[DataFrame, float]:
     """Sweep ε over ``eps_values`` (the reference's outer loop,
     ``DBSCAN.py:158``), computing the pair set ONCE at max ε.
 
     Scale design: the whole sweep runs on the *contracted* point set
-    (distinct feature vectors weighted by multiplicity — see dbscan.py):
-    one grid join at max ε over reps, then per ε only filters, weighted
-    aggregations and a CC fixpoint on the rep graph. Per-point metrics
-    are exact because duplicates share features:
+    (distinct feature vectors weighted by multiplicity — the rep graph
+    of dbscan.py): one grid join at max ε over reps, then per ε only
+    filters, weighted aggregations and the rep labelling. Per-point
+    metrics are exact because duplicates share features:
     Σ_points dist = Σ_reps mult·dist, and centroids are
     multiplicity-weighted means.
 
@@ -327,121 +328,53 @@ def eps_sweep(
     max_eps = max(eps_values)
     spark = points.sparkSession
 
-    # scalar per-dimension group keys — see dbscan.py's contraction note
-    from dbscan_pyspark_spark.operators.eps_join import _contract_key_cols
-
-    _kc = [f"_f{i}" for i in range(dim)]
-    reps = (
-        points.select(F.col(id_col), *_contract_key_cols(features, dim))
-        .groupBy(*_kc)
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
-        .select(
-            F.array(*[F.col(k) for k in _kc]).alias(features),
-            F.col(id_col),
-            F.col("_mult"),
-        )
-        .persist()
-    )
-    from dbscan_pyspark_spark.operators.eps_join import eps_join
-
-    all_pairs = (
-        eps_join(reps, reps, max_eps, metric=metric, features=features,
-                 id_col=id_col, dim=dim, payload_b=["_mult"])
-        .withColumnRenamed("b__mult", "_mult_b")
-        .persist()
-    )
+    reps = _contract_reps(points, features, id_col, dim).persist()
+    all_pairs = eps_join(
+        reps, reps, max_eps, metric=metric, features=features,
+        id_col=id_col, dim=dim, payload_b=["_mult"],
+    ).persist()
     n_total = points.count()
     inf = float("inf")
 
     # Kruskal sweep (guide §1.2 "the distributed algorithm"): when the
-    # max-ε pair relation fits the driver (same 5M bound as
-    # connected_components' union-find fast path), ONE collect + one
-    # incremental union-find pass yields every ε level's assignment —
-    # replacing each ε's counts/cores/edges/CC/sizes job chain. Metrics
-    # still run through the unchanged Spark aggregations below, so the
-    # declared query computes exactly what it did. Larger pair sets
-    # fall back to the per-ε distributed chain.
+    # max-ε pair relation fits the driver, ONE collect + one incremental
+    # union-find pass yields every ε level's assignment — replacing each
+    # ε's labelling job chain. Metrics still run through the unchanged
+    # Spark aggregations below, so the declared query computes exactly
+    # what it did. Larger pair sets, and any failure of the driver
+    # attempt (Arrow pull, driver memory, the pass itself), take the
+    # per-ε distributed chain.
     label_pdfs = None
-    if driver_threshold > 0 and all_pairs.count() <= driver_threshold:
+    if all_pairs.count() <= _SWEEP_DRIVER_PAIRS:
         try:
+            mult_pdf = reps.select(id_col, "_mult").toPandas()
             label_pdfs = _sweep_assignments_driver(
-                all_pairs.select("a_id", "b_id", "distance", "_mult_b").toPandas(),
-                reps.select(id_col, "_mult").toPandas(),
-                eps_values, min_pts, min_cluster_size, id_col,
+                all_pairs.select("a_id", "b_id", "distance", "b__mult").toPandas(),
+                mult_pdf, eps_values, min_pts, id_col,
             )
-        except ImportError:  # numpy/pandas-free env: distributed path
-            label_pdfs = None
+        except Exception as exc:
+            msg = f"eps_sweep: driver Kruskal pass failed ({exc!r}); using the per-ε chain"
+            warnings.warn(msg, RuntimeWarning, stacklevel=2)
+    n_reps = None if label_pdfs is not None else reps.count()
 
     def _one_eps(eps):
-            # one ε's labels + weighted metrics — unchanged math;
-            # bodies for different ε run concurrently (guide §2.6: the
-            # per-ε chain is many small dependent jobs, so overlapping
-            # sweeps hides per-job scheduling latency; 2-3 in flight)
-            if label_pdfs is not None:
-                lab = spark.createDataFrame(
-                    label_pdfs[float(eps)],
-                    f"{id_col} long, cluster_id long",
-                )
-                rep_labels = (
-                    reps.select(id_col, features, "_mult")
-                    .join(lab, id_col, "left")
-                    .persist()
-                )
-            else:
-                pairs = all_pairs.where(F.col("distance") < F.lit(float(eps)))
-                counts = pairs.groupBy("a_id").agg(F.sum("_mult_b").alias("n"))
-                cores = counts.where(F.col("n") >= min_pts).select(
-                    F.col("a_id").alias("core_id")
-                )
-                edges = pairs.join(cores, pairs["a_id"] == cores["core_id"]).select(
-                    F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-                )
-                participating = (
-                    edges.select(F.col("src").alias(id_col))
-                    .union(edges.select(F.col("dst").alias(id_col)))
-                    .distinct()
-                )
-                labels = connected_components(
-                    edges, vertices=participating, id_col=id_col
-                )
-                sizes = (
-                    labels.join(reps.select(id_col, "_mult"), id_col)
-                    .groupBy("component")
-                    .agg(F.sum("_mult").alias("_n"))
-                )
-                # reps in the graph: cluster if component mass >= k, else
-                # noise. Edgeless reps: every original row is its own
-                # singleton component -> noise whenever
-                # min_cluster_size > 1.
-                rep_labels = (
-                    reps.select(id_col, features, "_mult")
-                    .join(
-                        labels.join(sizes, "component").select(
-                            id_col,
-                            F.when(
-                                F.col("_n") >= min_cluster_size,
-                                F.col("component"),
-                            ).alias("cluster_id"),
-                            F.lit(True).alias("_in_graph"),
-                        ),
-                        id_col,
-                        "left",
-                    )
-                    .select(
-                        id_col,
-                        features,
-                        "_mult",
-                        F.when(
-                            F.col("_in_graph").isNull()
-                            & F.lit(min_cluster_size <= 1),
-                            F.col(id_col),
-                        )
-                        .otherwise(F.col("cluster_id"))
-                        .alias("cluster_id"),
-                    )
-                    .persist()
-                )
-
+        # one ε's labels + weighted metrics; the ε bodies run
+        # concurrently to hide per-job scheduling latency (guide §2.6)
+        if label_pdfs is not None:
+            lab = _driver_graph_labels(
+                label_pdfs[float(eps)], mult_pdf, min_cluster_size, id_col, spark
+            )
+            labeled = nullcontext(
+                _with_rep_labels(reps, lab, id_col, features, min_cluster_size)
+            )
+        else:
+            labeled = _labeled_reps(
+                all_pairs.where(F.col("distance") < F.lit(float(eps))),
+                reps, n_reps, min_pts, min_cluster_size, id_col, features,
+                half=False,
+            )
+        with labeled as rep_labels:
+            rep_labels = rep_labels.persist()
             clustered = rep_labels.where(F.col("cluster_id").isNotNull())
 
             # weighted centroids
@@ -462,7 +395,11 @@ def eps_sweep(
                 )
             )
             cluster_agg = clustered.join(cents, "cluster_id").agg(
-                F.count_distinct("cluster_id").alias("n_clusters"),
+                # a _solo rep stands for _mult singleton clusters
+                (
+                    F.count_distinct("cluster_id")
+                    + F.sum(F.when(F.col("_solo"), F.col("_mult") - 1).otherwise(0))
+                ).alias("n_clusters"),
                 F.sum(F.col("_mult") * dist(features, "centroid")).alias("err"),
             )
             noise = rep_labels.where(F.col("cluster_id").isNull())
@@ -478,24 +415,24 @@ def eps_sweep(
                 )
             )
             # ONE action per ε: both 1-row aggregates ride a single
-            # crossJoin job (replacing isEmpty + two .first()s — the
-            # per-ε cost is job-scheduling latency, not data)
+            # crossJoin job (the per-ε cost is job-scheduling latency,
+            # not data)
             stats = cluster_agg.crossJoin(noise_agg).first()
             rep_labels.unpersist()
-            if not stats["n_clusters"]:
-                # zero clusters at this ε: every original row is noise
-                # and there is no centroid to measure error against
-                return (float(eps), 0, n_total, 0.0, inf, inf)
-            ce = float(stats["err"] or 0.0)
-            ne = float(stats["nerr"] or 0.0)
-            return (
-                float(eps),
-                int(stats["n_clusters"]),
-                int(stats["n_noise"]),
-                ce,
-                ne,
-                ce + ne,
-            )
+        if not stats["n_clusters"]:
+            # zero clusters at this ε: every original row is noise
+            # and there is no centroid to measure error against
+            return (float(eps), 0, n_total, 0.0, inf, inf)
+        ce = float(stats["err"] or 0.0)
+        ne = float(stats["nerr"] or 0.0)
+        return (
+            float(eps),
+            int(stats["n_clusters"]),
+            int(stats["n_noise"]),
+            ce,
+            ne,
+            ce + ne,
+        )
 
     try:
         from dbscan_pyspark_spark.compat import concurrent_map_ordered

@@ -120,14 +120,9 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     driver, return pandas (id, component). Chosen adaptively by observed edge
     count — the same strategy-by-size philosophy as AQE. A 100 TB run
     whose *contracted* cluster graph fits in driver memory (it usually
-    does: components, not rows) also takes this path.
-
-    Vectorized hooking + pointer jumping over numpy arrays (O(E) per
-    round, O(log n) rounds) — ~10x the per-edge Python union-find loop
-    at hundreds of thousands of edges. Duplicate / mirrored edges and
-    self-loops are all tolerated. Components are labeled by their
-    minimum member id: links always hook the larger dense index to the
-    smaller, and dense indices are id-sorted (np.unique)."""
+    does: components, not rows) also takes this path. Dense indices are
+    id-sorted (np.unique), so :func:`_union_min_root` labels each
+    component with its minimum member id."""
     import numpy as np
     import pandas as pd
 
@@ -137,8 +132,17 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
     u = pdf["u"].to_numpy(dtype="int64", copy=False)
     v = pdf["v"].to_numpy(dtype="int64", copy=False)
     ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-    eu, ev = inv[: len(u)], inv[len(u):]
-    parent = np.arange(len(ids))
+    parent = _union_min_root(np.arange(len(ids)), inv[: len(u)], inv[len(u):])
+    return pd.DataFrame({id_col: ids, "component": ids[parent]})
+
+
+def _union_min_root(parent, eu, ev):
+    """Union the edges (eu[i], ev[i]) into the numpy forest ``parent``;
+    returns it fully path-compressed, each root the minimum index of its
+    tree. Vectorized hooking + pointer jumping (O(E) per round, O(log n)
+    rounds) — ~10x a per-edge Python loop at hundreds of thousands of
+    edges; duplicate, mirrored and self-loop edges are no-ops."""
+    import numpy as np
 
     while True:
         # full path compression (pointer jumping to fixpoint)
@@ -150,13 +154,11 @@ def _driver_union_find(e: DataFrame, id_col: str) -> DataFrame:
         pu, pv = parent[eu], parent[ev]
         hooks = pu != pv
         if not hooks.any():
-            break
+            return parent
         lo = np.minimum(pu[hooks], pv[hooks])
         hi = np.maximum(pu[hooks], pv[hooks])
         # min-accumulate handles multiple hooks onto the same root
         np.minimum.at(parent, hi, lo)
-
-    return pd.DataFrame({id_col: ids, "component": ids[parent]})
 
 
 def connected_components(
@@ -222,13 +224,7 @@ def connected_components(
         labels = edges.sparkSession.createDataFrame(
             labels_pdf, f"{id_col} long, component long"
         )
-        if vertices is not None:
-            vs = vertices.select(F.col(id_col).cast("long").alias(id_col)).distinct()
-            labels = vs.join(labels, id_col, "left").select(
-                F.col(id_col),
-                F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-            )
-        return labels
+        return _on_vertices(labels, vertices, id_col)
 
     e = raw.where(F.col("u") != F.col("v"))
     # A node whose only edges are self-loops IS a participant (it must
@@ -344,14 +340,19 @@ def connected_components(
         selfloop_only.join(labels.select(id_col), id_col, "left_anti")
         .withColumn("component", F.col(id_col))
     )
+    return _on_vertices(labels, vertices, id_col)
 
-    if vertices is not None:
-        vs = vertices.select(F.col(id_col).cast("long").alias(id_col)).distinct()
-        labels = vs.join(labels, id_col, "left").select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
-        )
-    return labels
+
+def _on_vertices(labels: DataFrame, vertices, id_col: str) -> DataFrame:
+    """``labels`` restricted to ``vertices`` (when given); a vertex in no
+    edge is its own component."""
+    if vertices is None:
+        return labels
+    vs = vertices.select(F.col(id_col).cast("long").alias(id_col)).distinct()
+    return vs.join(labels, id_col, "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
+    )
 
 
 def pagerank(

@@ -15,17 +15,18 @@ Pipeline (all DataFrame ops — SURVEY.md §3.1 rebuilt declaratively):
 5. components with >= min_cluster_size members are clusters, everything
    else is noise (``DBSCAN.py:176-181`` — the anonymity k, not min_pts).
 
-Scale design — duplicate contraction (on by default): points sharing a
-feature vector are interchangeable (same neighbors, same core status,
-same component), so the join/CC graph runs over *distinct* vectors
-weighted by multiplicity and labels are broadcast back by vector
-equality. Low-cardinality/quantized data (the anonymization use case —
-integer quasi-identifiers) contracts orders of magnitude; continuous
-data contracts to ~n and costs one extra groupBy. All counts use
-multiplicities, so the result is bit-identical to the uncontracted run:
-neighbor counts still include self and duplicate rows, and an edgeless
-duplicate group is still |group| singleton components, not one
-component of size |group|.
+Everything runs on the contracted rep graph: points sharing a feature
+vector are interchangeable (same neighbors, core status and component),
+so the pipeline runs over *distinct* vectors weighted by multiplicity
+and labels expand back by vector equality — orders of magnitude fewer
+pairs on quantized data (integer quasi-identifiers), one extra groupBy
+on continuous data. Counts use multiplicities, so results are
+bit-identical to an uncontracted run (an edgeless duplicate group is
+still |group| singletons). The core is shared: eps_join.py holds the
+contraction, weighted counts and expansion (``neighbor_counts`` uses
+them too), :func:`_labeled_reps` the pairs -> cores -> edges -> CC ->
+cluster-id labelling (``eps_sweep`` runs it per ε), components.py the
+numpy min-root union-find.
 
 Note the reference quirk, preserved on purpose: because edges run core ->
 *all* neighbors, two cores farther than ε apart can merge through a
@@ -34,17 +35,25 @@ shared border point. That is its documented behavior (SURVEY.md §7).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators.components import connected_components
-from dbscan_pyspark_spark.operators.eps_join import eps_join
+from dbscan_pyspark_spark.operators.eps_join import (
+    _contract_reps,
+    _dim_of,
+    _expand_reps,
+    _weighted_counts,
+    eps_join,
+)
 
-# pair_strategy='auto' crossover: below this rep count the join is cheap
-# and stage overhead dominates (symmetric measured faster at 58k reps,
-# sf0.1); above it per-pair distance compute dominates and the half-pair
-# join's 2x saving wins. A judgment call between the measured regimes —
-# revisit with a cluster-scale measurement.
+# Pair-join shape crossover, by rep count: below it the symmetric join
+# wins (cheap join, stage overhead dominates: ~11.6s vs ~17.7s at sf0.1,
+# 58k reps); above it unique pairs halve the candidate build and the
+# distance evaluations, which dominate once the rep set stays large. A
+# judgment call between the measured regimes — revisit at cluster scale.
 _HALF_PAIR_THRESHOLD = 500_000
 
 # Below this rep count the label map (rep features + cluster id) is
@@ -57,6 +66,140 @@ _HALF_PAIR_THRESHOLD = 500_000
 _BROADCAST_EXPAND_THRESHOLD = 1_000_000
 
 
+@contextmanager
+def _labeled_reps(
+    pairs: DataFrame,
+    reps: DataFrame,
+    n_reps: int,
+    min_pts: int,
+    min_cluster_size: int,
+    id_col: str,
+    features: str,
+    half: bool,
+    variant: str = "cc",
+):
+    """Yields every rep of ``reps`` labeled:
+    ``DataFrame(id_col, features, _mult, cluster_id, _solo)``.
+
+    ``pairs`` is the ``_mult``-carrying ε-join of ``reps`` with itself:
+    unique a<b pairs when ``half``, else symmetric with self-pairs. The
+    edges stay cached until the context exits: distributed labels keep
+    their lineage.
+    """
+    counts = _weighted_counts(pairs, reps, id_col, half)
+    cores = counts.where(F.col("n_neighbors") >= F.lit(int(min_pts))).select(
+        F.col("pid").alias("core_id")
+    )
+    if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
+        # <= n_reps single-long rows: broadcasting turns the core-filter
+        # join into a map-side probe of the pairs instead of shuffling
+        # the whole pair relation.
+        cores = F.broadcast(cores)
+    if half:
+        # reference edges run core -> every ε-neighbor incl. itself:
+        # mirror the half pairs and add core self-loops.
+        sym = pairs.select(
+            F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+        ).unionAll(
+            pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
+        )
+        edges = sym.join(cores, sym["src"] == cores["core_id"]).select(
+            "src", "dst"
+        ).unionAll(
+            cores.select(F.col("core_id").alias("src"), F.col("core_id").alias("dst"))
+        )
+    else:
+        edges = pairs.join(cores, pairs["a_id"] == cores["core_id"]).select(
+            F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+        )
+    if variant == "scc":
+        # Directed mutual reachability == both orientations present ==
+        # core-core ε-pairs.
+        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        edges = edges.intersect(rev)
+    edges = edges.persist()
+    try:
+        # connected_components labels every edge participant, including
+        # cores whose only edge is their self-loop (a duplicate group
+        # dense enough to be its own cluster), so no vertex list — and
+        # no distinct over the full edge relation — is needed; reps in
+        # no edge come out of the left join below unlabeled.
+        labels = connected_components(edges, id_col=id_col, as_pandas=True)
+        import pandas as pd
+
+        spark = reps.sparkSession
+        labels_is_pdf = isinstance(labels, pd.DataFrame)
+        if n_reps <= _BROADCAST_EXPAND_THRESHOLD or (
+            labels_is_pdf and len(labels) <= _BROADCAST_EXPAND_THRESHOLD
+        ):
+            # Driver-side finish, bounded like the broadcast label map:
+            # two Arrow pulls and vectorized pandas instead of four small
+            # shuffle joins (~8 s -> ~2 s on the sf0.1 lineitem cloud).
+            graph_labels = _driver_graph_labels(
+                labels if labels_is_pdf else labels.toPandas(),
+                reps.select(id_col, "_mult").toPandas(),
+                min_cluster_size, id_col, spark,
+            )
+        else:
+            if labels_is_pdf:
+                # driver union-find, but too many labels to broadcast back
+                labels = spark.createDataFrame(labels, f"{id_col} long, component long")
+            # component mass = sum of member multiplicities (original rows)
+            sizes = (
+                labels.join(reps.select(id_col, "_mult"), id_col)
+                .groupBy("component")
+                .agg(F.sum("_mult").alias("_n"))
+            )
+            graph_labels = labels.join(sizes, "component").select(
+                F.col(id_col),
+                F.when(
+                    F.col("_n") >= F.lit(int(min_cluster_size)), F.col("component")
+                ).alias("cluster_id"),
+                F.lit(True).alias("_in_graph"),
+            )
+        yield _with_rep_labels(reps, graph_labels, id_col, features, min_cluster_size)
+    finally:
+        edges.unpersist()
+
+
+def _driver_graph_labels(lab, mult, min_cluster_size, id_col, spark) -> DataFrame:
+    """Broadcast graph labels ``(id_col, cluster_id, _in_graph)`` from
+    pandas ``lab (id_col, component)`` and ``mult (id_col, _mult)``: a
+    component is a cluster iff its mass reaches ``min_cluster_size``."""
+    m = lab.merge(mult, on=id_col, how="left")
+    mass = m.groupby("component")["_mult"].transform("sum")
+    m["cluster_id"] = m["component"].astype("Int64").where(mass >= int(min_cluster_size))
+    m["_in_graph"] = True
+    return F.broadcast(
+        spark.createDataFrame(
+            m[[id_col, "cluster_id", "_in_graph"]],
+            f"{id_col} long, cluster_id long, _in_graph boolean",
+        )
+    )
+
+
+def _with_rep_labels(
+    reps: DataFrame,
+    graph_labels: DataFrame,
+    id_col: str,
+    features: str,
+    min_cluster_size: int,
+) -> DataFrame:
+    """Every rep with its label. ``graph_labels`` covers the reps in some
+    edge; any other rep is noise, or ``_solo`` when
+    ``min_cluster_size <= 1``: each of its rows is a singleton cluster."""
+    solo = F.col("_in_graph").isNull() & F.lit(min_cluster_size <= 1)
+    return reps.select(id_col, features, "_mult").join(
+        graph_labels, id_col, "left"
+    ).select(
+        id_col,
+        features,
+        "_mult",
+        F.when(solo, F.col(id_col)).otherwise(F.col("cluster_id")).alias("cluster_id"),
+        solo.alias("_solo"),
+    )
+
+
 def dbscan(
     points: DataFrame,
     eps: float,
@@ -67,8 +210,6 @@ def dbscan(
     id_col: str = "id",
     dim: int | None = None,
     variant: str = "cc",
-    contract_duplicates: bool = True,
-    pair_strategy: str = "auto",
 ) -> DataFrame:
     """Cluster ``points`` -> DataFrame(id, cluster_id, is_noise).
 
@@ -77,249 +218,57 @@ def dbscan(
     NULL for noise. ``min_cluster_size`` defaults to ``min_pts`` and is
     the reference's k-anonymity threshold (``DBSCAN.py:47,176``).
 
-    ``pair_strategy`` — how the ε-pair relation is built (AQE-style
-    size-adaptive choice, measured not guessed):
-
-    - ``'symmetric'``: one join emitting both pair orientations. Fewer
-      stages; wins when duplicate contraction has already shrunk the
-      graph so the join is cheap and the CC fixpoint dominates
-      (A/B at sf0.1, 600k rows -> 58k reps: ~11.6s vs ~17.7s).
-    - ``'half'``: unique-pairs join (half the candidate build, half the
-      distance evaluations, (3^d+1)/2 probe-cell explode instead of
-      3^d) + narrow mirror maps. Wins when the rep set stays large —
-      continuous features at cluster scale — and per-pair compute, not
-      stage count, is the bottleneck.
-    - ``'auto'``: symmetric below ``_HALF_PAIR_THRESHOLD`` reps, half
-      above; the rep count is one cheap job over the already-persisted
-      contraction.
+    The ε-pair relation is symmetric below ``_HALF_PAIR_THRESHOLD``
+    reps and unique-pairs above (an AQE-style size-adaptive choice;
+    both give identical labels); the rep count is one cheap job over
+    the persisted contraction and also picks the expansion strategy.
     """
     if min_cluster_size is None:
         min_cluster_size = min_pts
     if variant not in ("cc", "scc"):
         raise ValueError(f"variant must be 'cc' or 'scc', got {variant!r}")
-    if pair_strategy not in ("auto", "symmetric", "half"):
-        raise ValueError(
-            f"pair_strategy must be 'auto', 'symmetric' or 'half', got {pair_strategy!r}"
-        )
 
     # The input lineage (often a window/exchange-bearing view) feeds both
     # the contraction and the final expansion join — cache it once.
     points = points.persist()
     if dim is None:
-        from dbscan_pyspark_spark.operators.eps_join import _dim_of
-
         dim = _dim_of(points, features)
-
-    if contract_duplicates:
-        # Group by one SCALAR double column per dimension, not by the
-        # array: the array key runs an interpreted normalize lambda per
-        # row per aggregation pass, scalar keys stay in codegen. Same
-        # equivalence classes (per-element NaN/-0.0 normalization both
-        # ways; feature arrays are non-null fixed-dim by construction
-        # at every call site) and the rebuilt array carries the same
-        # normalized element values the array key emitted.
-        from dbscan_pyspark_spark.operators.eps_join import _contract_key_cols
-
-        key_cols = [f"_f{i}" for i in range(dim)]
-        reps = (
-            points.select(F.col(id_col), *_contract_key_cols(features, dim))
-            .groupBy(*key_cols)
-            .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
-            .select(
-                F.array(*[F.col(k) for k in key_cols]).alias(features),
-                F.col(id_col),
-                F.col("_mult"),
-            )
-        )
-    else:
-        reps = points.select(features, id_col).withColumn("_mult", F.lit(1))
-    reps = reps.persist()
-
-    # One cheap job over the persisted contraction sizes BOTH adaptive
-    # choices: the pair-join shape and the expansion-join strategy.
+    reps = _contract_reps(points, features, id_col, dim).persist()
     n_reps = reps.count()
-    if pair_strategy == "auto":
-        pair_strategy = "half" if n_reps >= _HALF_PAIR_THRESHOLD else "symmetric"
+    half = n_reps >= _HALF_PAIR_THRESHOLD
 
     # Multiplicities (how many original rows each rep stands for) ride
     # through the cell join as payload — joining them onto the pair set
     # afterwards would shuffle the pairs a second time.
-    pairs = edges = None
+    pairs = None
     try:
-        if pair_strategy == "half":
-            pairs = eps_join(
-                reps, reps, eps, metric=metric, features=features,
-                id_col=id_col, dim=dim, keep_distance=False,
-                payload_a=["_mult"], payload_b=["_mult"], unique_pairs=True,
-            ).persist()
-            # each a<b pair feeds both endpoints' counts; every rep also
-            # counts its own rows (the reference's self-pairs).
-            legs = pairs.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a_id").alias("pid"), F.col("b__mult").alias("m")
-                        ),
-                        F.struct(
-                            F.col("b_id").alias("pid"), F.col("a__mult").alias("m")
-                        ),
-                    )
-                ).alias("e")
-            ).select("e.pid", "e.m")
-            counts = (
-                legs.unionAll(
-                    reps.select(F.col(id_col).alias("pid"), F.col("_mult").alias("m"))
-                )
-                .groupBy("pid")
-                .agg(F.sum("m").alias("n_neighbors"))
-            )
-            cores = counts.where(
-                F.col("n_neighbors") >= F.lit(int(min_pts))
-            ).select(F.col("pid").alias("core_id"))
-            if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-                # <= n_reps single-long rows: broadcasting turns the
-                # core-filter join into a map-side probe of the cached
-                # pairs instead of shuffling the whole pair relation.
-                cores = F.broadcast(cores)
-            # reference edges run core -> every ε-neighbor incl. itself:
-            # mirror the cached half pairs and add core self-loops.
-            sym = pairs.select(
-                F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-            ).unionAll(
-                pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
-            )
-            edges = sym.join(cores, sym["src"] == cores["core_id"]).select(
-                "src", "dst"
-            ).unionAll(
-                cores.select(
-                    F.col("core_id").alias("src"), F.col("core_id").alias("dst")
-                )
-            )
-        else:
-            pairs = eps_join(
-                reps, reps, eps, metric=metric, features=features, id_col=id_col,
-                dim=dim, keep_distance=False, payload_b=["_mult"],
-            ).withColumnRenamed("b__mult", "_mult_b").persist()
-            counts = pairs.groupBy("a_id").agg(
-                F.sum("_mult_b").alias("n_neighbors")
-            )
-            cores = counts.where(
-                F.col("n_neighbors") >= F.lit(int(min_pts))
-            ).select(F.col("a_id").alias("core_id"))
-            if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-                cores = F.broadcast(cores)
-            edges = pairs.join(cores, pairs["a_id"] == cores["core_id"]).select(
-                F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-            )
-        if variant == "scc":
-            # Directed mutual reachability == both orientations present ==
-            # core-core ε-pairs.
-            rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            edges = edges.intersect(rev)
-        edges = edges.persist()
-
-        # Reps that appear in no edge expand to singleton components per
-        # ORIGINAL row (an edgeless duplicate group is |group| singletons).
-        # connected_components labels every edge participant, including
-        # cores whose only edge is their self-loop (a duplicate group
-        # dense enough to be its own cluster), so no vertex list — and
-        # no distinct over the full edge relation — is needed here.
-        labels = connected_components(edges, id_col=id_col, as_pandas=True)
-        import pandas as pd
-
-        labels_is_pdf = isinstance(labels, pd.DataFrame)
-        if labels_is_pdf and not (
-            n_reps <= _BROADCAST_EXPAND_THRESHOLD
-            or len(labels) <= _BROADCAST_EXPAND_THRESHOLD
-        ):
-            # Graph small enough for driver union-find but the label set
-            # is too big to broadcast back — rehydrate and take the
-            # distributed finish.
-            labels = points.sparkSession.createDataFrame(
-                labels, f"{id_col} long, component long"
-            )
-            labels_is_pdf = False
-        if labels_is_pdf or n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-            # Driver-side finish. Every structure here — graph labels,
-            # rep multiplicities, the per-component mass — is bounded by
-            # n_reps, the same bound that makes rep_map broadcastable
-            # below, so this adds no scale risk the broadcast didn't
-            # already accept. It replaces a chain of four small shuffle
-            # joins (sizes, rep_labels, and their recomputed branches)
-            # with two Arrow pulls and vectorized pandas: measured ~8 s
-            # -> ~2 s on the sf0.1 lineitem cloud (58k reps).
-            lab = labels if labels_is_pdf else labels.toPandas()
-            mult = reps.select(id_col, "_mult").toPandas()
-            m = lab.merge(mult, on=id_col, how="left")
-            mass = m.groupby("component")["_mult"].transform("sum")
-            cluster = m["component"].astype("Int64").where(
-                mass >= int(min_cluster_size)
-            )
-            rep_labels_pdf = pd.DataFrame(
-                {
-                    "_rep_id": m[id_col].astype("int64"),
-                    "cluster_id": cluster,
-                    "_in_graph": True,
-                }
-            )
-            rep_labels = F.broadcast(
-                points.sparkSession.createDataFrame(
-                    rep_labels_pdf,
-                    "_rep_id long, cluster_id long, _in_graph boolean",
-                )
-            )
-        else:
-            # component mass = sum of member multiplicities (original rows)
-            sizes = (
-                labels.join(reps.select(id_col, "_mult"), id_col)
-                .groupBy("component")
-                .agg(F.sum("_mult").alias("_n"))
-            )
-            rep_labels = labels.join(sizes, "component").select(
-                F.col(id_col).alias("_rep_id"),
-                F.when(
-                    F.col("_n") >= F.lit(int(min_cluster_size)), F.col("component")
-                ).alias("cluster_id"),
-                F.lit(True).alias("_in_graph"),
-            )
-
-        # Expand back to original rows by feature equality, equi-keyed on
-        # the 64-bit feature hash (cheap to shuffle/compare; the exact
-        # array equality stays as a residual so hash collisions cannot
-        # mislabel). Small rep sets broadcast — the points side is then
-        # never shuffled.
-        rep_map = reps.select(
-            F.col(features).alias("_rep_features"), F.col(id_col).alias("_rep_id")
-        ).join(rep_labels, "_rep_id", "left").withColumn(
-            "_rep_h", F.xxhash64("_rep_features")
-        )
-        if n_reps <= _BROADCAST_EXPAND_THRESHOLD:
-            rep_map = F.broadcast(rep_map)
-        pts_h = points.withColumn("_h", F.xxhash64(F.col(features)))
-        out = pts_h.join(
-            rep_map,
-            (pts_h["_h"] == rep_map["_rep_h"])
-            & (pts_h[features] == rep_map["_rep_features"]),
-            "left",
-        ).select(
-            pts_h[id_col],
-            # edgeless rep (no CC row): every original row is a singleton
-            # component -> cluster of itself iff min_cluster_size <= 1
-            F.when(
-                F.col("_in_graph").isNull() & F.lit(min_cluster_size <= 1),
-                pts_h[id_col],
-            )
-            .otherwise(F.col("cluster_id"))
-            .alias("cluster_id"),
-        ).withColumn("is_noise", F.col("cluster_id").isNull())
-        out = out.localCheckpoint(eager=True)
+        pairs = eps_join(
+            reps, reps, eps, metric=metric, features=features, id_col=id_col,
+            dim=dim, keep_distance=False, payload_a=["_mult"] if half else None,
+            payload_b=["_mult"], unique_pairs=half,
+        ).persist()
+        with _labeled_reps(
+            pairs, reps, n_reps, min_pts, min_cluster_size, id_col, features,
+            half, variant,
+        ) as labeled:
+            # an edgeless rep's original rows are singleton clusters of
+            # themselves (``_solo``), each labeled with its own row id
+            out = _expand_reps(
+                points,
+                labeled.select(features, "cluster_id", "_solo"),
+                features,
+                id_col,
+                broadcast=n_reps <= _BROADCAST_EXPAND_THRESHOLD,
+            ).select(
+                id_col,
+                F.when(F.col("_solo"), F.col(id_col))
+                .otherwise(F.col("cluster_id"))
+                .alias("cluster_id"),
+            ).withColumn("is_noise", F.col("cluster_id").isNull())
+            out = out.localCheckpoint(eager=True)
     finally:
-        for df in (pairs, edges):
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        if pairs is not None:
+            pairs.unpersist()
         reps.unpersist()
         points.unpersist()
     return out

@@ -61,28 +61,105 @@ def _dim_of(df: DataFrame, features: str) -> int:
     return int(row["d"])
 
 
-def _contract_key_cols(features: str, dim: int) -> list:
-    """Per-dimension scalar key columns (``_f0``.. ``_f{dim-1}``) for
-    duplicate contraction, with a ragged-input guard folded into
-    dimension 0: indexing a short (or null) feature array yields equal
-    NULL keys, which would silently merge distinct vectors — a wrong
-    length raises instead. One ``size()`` comparison per row, still
-    whole-stage codegen."""
+def _contract_reps(
+    points: DataFrame, features: str, id_col: str, dim: int
+) -> DataFrame:
+    """Duplicate contraction: ``(features, id_col, _mult)``, one row per
+    distinct vector, rep id = minimum member id (deterministic, so
+    re-executed subtrees agree), ``_mult`` = member count.
+
+    Groups by one scalar column per dimension, not by the array: the
+    array key runs an interpreted normalize lambda per row, scalar keys
+    stay in codegen. Dimension 0 carries a guard: a short or NULL array
+    would yield NULL keys and silently merge distinct vectors, so it
+    raises instead."""
     f = F.col(features)
+    got = F.when(f.isNull(), F.lit("a null array")).otherwise(
+        F.concat(F.lit("size "), F.size(f).cast("string"))
+    )
     guard = F.when(F.size(f) == dim, f[0]).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(
                     "duplicate contraction expects fixed "
-                    f"{dim}-dim feature vectors, got size "
+                    f"{dim}-dim feature vectors, got "
                 ),
-                F.size(f).cast("string"),
+                got,
             )
         )
     )
-    return [guard.alias("_f0")] + [
-        f[i].alias(f"_f{i}") for i in range(1, dim)
-    ]
+    key_cols = [f"_f{i}" for i in range(dim)]
+    return (
+        points.select(
+            F.col(id_col),
+            guard.alias("_f0"),
+            *[f[i].alias(f"_f{i}") for i in range(1, dim)],
+        )
+        .groupBy(*key_cols)
+        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_mult"))
+        .select(
+            F.array(*[F.col(k) for k in key_cols]).alias(features),
+            F.col(id_col),
+            F.col("_mult"),
+        )
+    )
+
+
+def _weighted_counts(
+    pairs: DataFrame, reps: DataFrame, id_col: str, half: bool
+) -> DataFrame:
+    """``DataFrame(pid, n_neighbors)``: each rep's ε-neighbour count in
+    original rows, self and duplicates included (``DBSCAN.py:161``).
+    ``pairs`` is the ``_mult``-carrying ε-join of ``reps`` with itself,
+    symmetric or, with ``half``, unique a<b pairs, whose every pair
+    feeds both endpoints and every rep adds its own rows."""
+    if not half:
+        return pairs.groupBy(F.col("a_id").alias("pid")).agg(
+            F.sum("b__mult").alias("n_neighbors")
+        )
+    legs = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a_id").alias("pid"), F.col("b__mult").alias("m")),
+                F.struct(F.col("b_id").alias("pid"), F.col("a__mult").alias("m")),
+            )
+        ).alias("e")
+    ).select("e.pid", "e.m")
+    return (
+        legs.unionAll(reps.select(F.col(id_col).alias("pid"), F.col("_mult").alias("m")))
+        .groupBy("pid")
+        .agg(F.sum("m").alias("n_neighbors"))
+    )
+
+
+def _expand_reps(
+    points: DataFrame,
+    rep_values: DataFrame,
+    features: str,
+    id_col: str,
+    broadcast: bool,
+) -> DataFrame:
+    """``DataFrame(id_col, *values)``: the ``rep_values`` columns other
+    than ``features`` joined back onto every original row by vector
+    equality, equi-keyed on the 64-bit feature hash with the exact
+    equality as residual (a collision cannot mislabel). ``broadcast``
+    spares the points side any shuffle; without it AQE usually
+    broadcasts the small rep side at runtime."""
+    values = [c for c in rep_values.columns if c != features]
+    rep_map = rep_values.select(
+        F.col(features).alias("_rep_features"),
+        F.xxhash64(features).alias("_rep_h"),
+        *values,
+    )
+    if broadcast:
+        rep_map = F.broadcast(rep_map)
+    pts_h = points.withColumn("_h", F.xxhash64(F.col(features)))
+    return pts_h.join(
+        rep_map,
+        (pts_h["_h"] == rep_map["_rep_h"])
+        & (pts_h[features] == rep_map["_rep_features"]),
+        "left",
+    ).select(pts_h[id_col], *values)
 
 
 def eps_join(
@@ -267,98 +344,33 @@ def neighbor_counts(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    contract_duplicates: bool = True,
 ) -> DataFrame:
     """Per-point ε-neighborhood size, **including self and duplicate
     rows** (reference ``reduceByKey`` list length at ``DBSCAN.py:161``).
     Never materializes neighbor lists — count only, partial-aggregated
     map-side.
 
-    Runs the join once per *unordered* pair (half the distance
-    evaluations) and mirrors counts by a 3-leg union: each a<b pair
-    contributes to both endpoints, and every vector contributes its own
-    self-pair(s).
-
-    ``contract_duplicates``: run the join over *distinct* feature
-    vectors weighted by multiplicity and broadcast counts back by
-    vector equality (the dbscan.py contraction). Quantized data (the
+    Runs on the contracted point set (the rep graph dbscan.py shares):
+    the join covers *distinct* feature vectors weighted by multiplicity,
+    once per *unordered* pair (half the distance evaluations), and the
+    counts expand back by vector equality. Quantized data (the
     anonymization use case) contracts many-fold — the customer point
     cloud at sf0.1 is 15k rows over ~2.7k vectors, a ~30x drop in
-    candidate pairs. Counts are bit-identical to the uncontracted run.
+    candidate pairs. Counts are bit-identical to an uncontracted run.
     """
-    if not contract_duplicates:
-        pairs = eps_self_join(
-            points, eps, metric=metric, features=features, id_col=id_col, dim=dim,
-            keep_distance=False, unique_pairs=True,
-        )
-        # explode, not a 2-leg union: a union would reference (and
-        # re-run) the join subtree once per leg — Catalyst does not CSE
-        # across union branches.
-        legs = pairs.select(
-            F.explode(F.array("a_id", "b_id")).alias(id_col)
-        ).unionAll(points.select(id_col))
-        return legs.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_neighbors"))
-
-    # rep id = min member id: deterministic, so the id is consistent
-    # even when the (unpersisted) contraction subtree is re-executed in
-    # different join branches — exchange reuse makes that rare, but
-    # correctness must not depend on it. Scalar per-dimension group
-    # keys (not the array) keep the hash-agg in codegen — see
-    # dbscan.py's contraction note.
     if dim is None:
         dim = _dim_of(points, features)
-    key_cols = [f"_f{i}" for i in range(dim)]
-    reps = (
-        points.select(F.col(id_col), *_contract_key_cols(features, dim))
-        .groupBy(*key_cols)
-        .agg(
-            F.min(id_col).alias("_rid"),
-            F.count(F.lit(1)).alias("_mult"),
-        )
-        .select(
-            F.array(*[F.col(k) for k in key_cols]).alias(features),
-            F.col("_rid"),
-            F.col("_mult"),
-        )
-    )
+    reps = _contract_reps(points, features, id_col, dim)
     pairs = eps_join(
-        reps, reps, eps, metric=metric, features=features, id_col="_rid", dim=dim,
+        reps, reps, eps, metric=metric, features=features, id_col=id_col, dim=dim,
         keep_distance=False, payload_a=["_mult"], payload_b=["_mult"],
         unique_pairs=True,
     )
-    legs = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a_id").alias("pid"), F.col("b__mult").alias("m")),
-                F.struct(F.col("b_id").alias("pid"), F.col("a__mult").alias("m")),
-            )
-        ).alias("e")
-    ).select("e.pid", "e.m")
-    counts = (
-        legs.unionAll(
-            reps.select(F.col("_rid").alias("pid"), F.col("_mult").alias("m"))
-        )
-        .groupBy("pid")
-        .agg(F.sum("m").alias("n_neighbors"))
+    counts = _weighted_counts(pairs, reps, id_col, half=True)
+    rep_n = reps.join(counts, reps[id_col] == counts["pid"]).select(
+        features, "n_neighbors"
     )
-    # Expansion equi-keyed on the 64-bit feature hash (cheap long key;
-    # exact array equality kept as residual so a collision cannot
-    # miscount). The rep side is tiny relative to points — AQE's
-    # size-based planning upgrades this to a broadcast join at runtime,
-    # so the points side is never shuffled.
-    rep_n = reps.select(features, "_rid").join(
-        counts, reps["_rid"] == counts["pid"]
-    ).select(
-        F.col(features).alias("_rep_features"),
-        F.xxhash64(features).alias("_rep_h"),
-        "n_neighbors",
-    )
-    pts_h = points.withColumn("_h", F.xxhash64(F.col(features)))
-    return pts_h.join(
-        rep_n,
-        (pts_h["_h"] == rep_n["_rep_h"])
-        & (pts_h[features] == rep_n["_rep_features"]),
-    ).select(F.col(id_col), "n_neighbors")
+    return _expand_reps(points, rep_n, features, id_col, broadcast=False)
 
 
 def core_points(
@@ -369,12 +381,10 @@ def core_points(
     features: str = "features",
     id_col: str = "id",
     dim: int | None = None,
-    contract_duplicates: bool = True,
 ) -> DataFrame:
     """Points with >= min_pts ε-neighbors (HAVING filter, SURVEY.md §2.2 P3)."""
     counts = neighbor_counts(
         points, eps, metric=metric, features=features, id_col=id_col, dim=dim,
-        contract_duplicates=contract_duplicates,
     )
     return counts.where(F.col("n_neighbors") >= F.lit(int(min_pts)))
 

@@ -1,8 +1,10 @@
 """Anonymization invariants (FIXTURES.md §3): sensitive preserved, every
 member's an_features equals its cluster mean, noise takes nearest centroid."""
 
+import importlib
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbscan_pyspark_spark.operators import dbscan
@@ -87,48 +89,94 @@ def test_information_loss_and_sweep(spark):
     assert best in (2.0, 4.0)
 
 
-def test_eps_sweep_matches_single_runs(spark):
-    rng = random.Random(29)
-    pts = _blobs(rng, [(0, 0), (20, 20)], 20, 2.0)
-    df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
-    metrics, _ = eps_sweep(df, [2.0, 5.0], min_pts=4)
-    for r in metrics.collect():
-        labels = dbscan(df, r["eps"], 4, 4)
-        single = information_loss(df, labels).first()
-        assert r["n_clusters"] == single["n_clusters"]
-        assert r["n_noise"] == single["n_noise"]
-        assert abs(r["total_error"] - single["total_error"]) < 1e-6
-
-
-def test_eps_sweep_kruskal_matches_per_eps_chain(spark):
-    """The driver Kruskal sweep (one union-find pass labeling every
-    eps level) must produce the same metrics as the per-eps
-    counts/cores/edges/CC chain it replaces (forced via
-    driver_threshold=0)."""
+def _dup_heavy_points():
+    """Three blobs, exact duplicates of twelve of their rows, and a far
+    duplicate triple that is never within ε of anything else."""
     rng = random.Random(31)
     pts = _blobs(rng, [(0, 0), (15, 15), (40, 0)], 18, 2.0)
-    # add exact duplicates so the contraction multiplicities matter
     pts = pts + [(10_000 + i, list(pts[i][1]), pts[i][2]) for i in range(12)]
-    df = spark.createDataFrame(pts, ["id", "features", "sensitive"])
+    return pts + [(20_000 + i, [90.0, 90.0], 1) for i in range(3)]
+
+
+def _assert_same_metrics(m_a, b_a, m_b, b_b):
+    assert b_a == b_b
+    ra = sorted(m_a.collect(), key=lambda r: r["eps"])
+    rb = sorted(m_b.collect(), key=lambda r: r["eps"])
+    assert len(ra) == len(rb)
+    for a, b in zip(ra, rb):
+        assert a["eps"] == b["eps"]
+        assert a["n_clusters"] == b["n_clusters"]
+        assert a["n_noise"] == b["n_noise"]
+        for col in ("cluster_error", "noise_error", "total_error"):
+            if a[col] == float("inf"):
+                assert b[col] == float("inf")
+            else:
+                assert abs(a[col] - b[col]) < 1e-6
+
+
+def test_eps_sweep_matches_single_runs(spark, monkeypatch):
+    """Each sweep row equals dbscan + information_loss at its ε, on the
+    Kruskal pass and on the per-ε chain (its pair bound forced to 0),
+    for blobs, duplicate-heavy input and min_cluster_size=1 singletons
+    (an edgeless duplicate group is one singleton cluster per row)."""
+    mod = importlib.import_module("dbscan_pyspark_spark.operators.anonymize")
+    rng = random.Random(29)
+    blobs = spark.createDataFrame(
+        _blobs(rng, [(0, 0), (20, 20)], 20, 2.0), ["id", "features", "sensitive"]
+    )
+    dups = spark.createDataFrame(_dup_heavy_points(), ["id", "features", "sensitive"])
+    for df, eps_values, min_pts, mcs in [
+        (blobs, [2.0, 5.0], 4, None),
+        (dups, [0.5, 2.0], 4, 1),
+        (dups, [2.0, 5.0], 1, 1),
+    ]:
+        single = {}
+        for eps in eps_values:
+            labels = dbscan(df, eps, min_pts, min_cluster_size=mcs)
+            single[eps] = information_loss(df, labels).first()
+        for bound in (5_000_000, 0):
+            monkeypatch.setattr(mod, "_SWEEP_DRIVER_PAIRS", bound)
+            metrics, _ = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
+            for r in metrics.collect():
+                s = single[r["eps"]]
+                assert r["n_clusters"] == s["n_clusters"], (r, s, bound)
+                assert r["n_noise"] == s["n_noise"], (r, s, bound)
+                assert abs(r["total_error"] - s["total_error"]) < 1e-6
+
+
+def test_eps_sweep_kruskal_matches_per_eps_chain(spark, monkeypatch):
+    """The driver Kruskal sweep (one union-find pass labeling every
+    eps level) must produce the same metrics as the per-eps
+    counts/cores/edges/CC chain it replaces (forced by a pair bound
+    of 0)."""
+    mod = importlib.import_module("dbscan_pyspark_spark.operators.anonymize")
+    df = spark.createDataFrame(_dup_heavy_points(), ["id", "features", "sensitive"])
     for eps_values, min_pts, mcs in [
         # 0.01 is the degenerate zero-cluster level (covered by
         # test_information_loss_and_sweep's assertion of that branch)
         ([0.01, 0.5, 2.0, 6.0], 4, None),
-        ([2.0, 5.0], 1, 1),       # mcs<=1: edgeless singleton clusters
+        ([2.0, 5.0], 1, 1),       # mcs<=1: every rep is core
+        ([0.5, 2.0], 4, 1),       # mcs<=1 with edgeless singleton reps
     ]:
+        monkeypatch.setattr(mod, "_SWEEP_DRIVER_PAIRS", 5_000_000)
         m_new, b_new = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
-        m_old, b_old = eps_sweep(
-            df, eps_values, min_pts, min_cluster_size=mcs, driver_threshold=0
-        )
-        assert b_new == b_old
-        rn = sorted(m_new.collect(), key=lambda r: r["eps"])
-        ro = sorted(m_old.collect(), key=lambda r: r["eps"])
-        for a, b in zip(rn, ro):
-            assert a["eps"] == b["eps"]
-            assert a["n_clusters"] == b["n_clusters"]
-            assert a["n_noise"] == b["n_noise"]
-            for col in ("cluster_error", "noise_error", "total_error"):
-                if a[col] == float("inf"):
-                    assert b[col] == float("inf")
-                else:
-                    assert abs(a[col] - b[col]) < 1e-6
+        monkeypatch.setattr(mod, "_SWEEP_DRIVER_PAIRS", 0)
+        m_old, b_old = eps_sweep(df, eps_values, min_pts, min_cluster_size=mcs)
+        _assert_same_metrics(m_new, b_new, m_old, b_old)
+
+
+def test_eps_sweep_driver_failure_falls_back(spark, monkeypatch):
+    """Any failure of the driver attempt (here driver memory) degrades
+    to the per-ε chain instead of aborting the sweep."""
+    mod = importlib.import_module("dbscan_pyspark_spark.operators.anonymize")
+    df = spark.createDataFrame(_dup_heavy_points(), ["id", "features", "sensitive"])
+    eps_values = [0.5, 2.0, 6.0]
+    m_kruskal, b_kruskal = eps_sweep(df, eps_values, 4)
+
+    def out_of_memory(*args, **kwargs):
+        raise MemoryError("driver heap exhausted")
+
+    monkeypatch.setattr(mod, "_sweep_assignments_driver", out_of_memory)
+    with pytest.warns(RuntimeWarning, match="driver heap exhausted"):
+        m_chain, b_chain = eps_sweep(df, eps_values, 4)
+    _assert_same_metrics(m_kruskal, b_kruskal, m_chain, b_chain)

@@ -5,6 +5,7 @@ core->neighbor; undirected CC; components >= k are clusters, rest noise
 (DBSCAN.py:161-181).
 """
 
+import importlib
 import random
 
 from dbscan_pyspark_spark.operators import dbscan
@@ -79,10 +80,11 @@ def test_dbscan_random_matches_oracle(spark):
         assert got == expected
 
 
-def test_dbscan_pair_strategies_identical(spark):
-    """'half' (unique-pairs + mirror) and 'symmetric' produce
+def test_dbscan_pair_strategies_identical(spark, monkeypatch):
+    """Half pairs (unique pairs + mirror) and symmetric pairs produce
     bit-identical labels — and both match the brute-force oracle —
-    so the auto crossover can never change results."""
+    so the _HALF_PAIR_THRESHOLD crossover can never change results."""
+    mod = importlib.import_module("dbscan_pyspark_spark.operators.dbscan")
     rng = random.Random(23)
     pts = [
         (i, [float(rng.randint(0, 20)), float(rng.randint(0, 20))])
@@ -90,12 +92,18 @@ def test_dbscan_pair_strategies_identical(spark):
     ] + [(1000 + i, [5.0, 5.0]) for i in range(10)]  # duplicate group
     df = spark.createDataFrame(pts, ["id", "features"]).repartition(4)
     expected = _oracle(pts, 3.0, 6, 6)
-    for strategy in ("symmetric", "half"):
-        got = {
-            r["id"]: r["cluster_id"]
-            for r in dbscan(df, 3.0, 6, 6, pair_strategy=strategy).collect()
-        }
-        assert got == expected, strategy
+    real_join, unique = mod.eps_join, []
+
+    def spy_join(*args, **kwargs):
+        unique.append(kwargs["unique_pairs"])
+        return real_join(*args, **kwargs)
+
+    monkeypatch.setattr(mod, "eps_join", spy_join)
+    for threshold in (10**9, 0):  # symmetric, then half
+        monkeypatch.setattr(mod, "_HALF_PAIR_THRESHOLD", threshold)
+        got = {r["id"]: r["cluster_id"] for r in dbscan(df, 3.0, 6, 6).collect()}
+        assert got == expected, threshold
+    assert unique == [False, True]
 
 
 def test_dbscan_scc_variant_smaller_clusters(spark):
@@ -150,14 +158,27 @@ def test_dbscan_assign_tie_breaks_deterministically(spark):
 
 
 def test_ragged_features_fail_loudly(spark):
-    """The scalar contraction keys assume fixed-dim vectors; ragged
-    input must raise instead of silently contracting distinct vectors
-    into one rep (ADVICE r10)."""
+    """The scalar contraction keys assume fixed-dim vectors; ragged or
+    NULL feature arrays must raise a readable error instead of silently
+    contracting distinct vectors into one rep (ADVICE r10). dbscan,
+    neighbor_counts and eps_sweep share that contraction."""
     import pytest as _pytest
 
-    bad = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [1.0]), (3, [1.0, 2.0, 3.0])],
-        "id long, features array<double>",
+    from dbscan_pyspark_spark.operators.anonymize import eps_sweep
+    from dbscan_pyspark_spark.operators.eps_join import neighbor_counts
+
+    schema = "id long, features array<double>"
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [1.0]), (3, [1.0, 2.0, 3.0])], schema
     )
-    with _pytest.raises(Exception, match="duplicate contraction expects"):
-        dbscan(bad, eps=1.5, min_pts=2).count()
+    null = spark.createDataFrame([(1, [1.0, 2.0]), (2, None), (3, [3.0, 4.0])], schema)
+    runs = (
+        lambda df: dbscan(df, eps=1.5, min_pts=2, dim=2).count(),
+        lambda df: neighbor_counts(df, 1.5, dim=2).count(),
+        lambda df: eps_sweep(df, [1.5], 2, dim=2),
+    )
+    prefix = "duplicate contraction expects fixed 2-dim feature vectors, got "
+    for df, got in ((ragged, "size [13]"), (null, "a null array")):
+        for run in runs:
+            with _pytest.raises(Exception, match=prefix + got):
+                run(df)
